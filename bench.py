@@ -424,6 +424,70 @@ def _abref_worktree(repo: str, ref: str) -> str:
     return wt
 
 
+def _abref_rounds(
+    workers: dict, names: list[str], rounds: int, sf_dir: str, issues: list[dict]
+) -> dict[str, dict[str, list[float | None]]]:
+    """The timed rounds of one ``run_ab_ref`` section. ``samples[query]
+    [side][i]`` is round ``i``'s time, or None when that run errored —
+    the error goes to ``issues`` with its round — so a head sample and a
+    ref sample at the same index always come from the same round."""
+    samples: dict[str, dict[str, list[float | None]]] = {
+        n: {"head": [None] * rounds, "ref": [None] * rounds} for n in names
+    }
+    for i in range(rounds):
+        for j, n in enumerate(names):
+            # the TRAILING side of each pair rides caches its twin
+            # just warmed (the null run measured a ~4% median bias
+            # toward whichever side consistently trailed), so the
+            # leading side flips per (round, query) parity rather
+            # than per round alone
+            sides = ("head", "ref") if (i + j) % 2 == 0 else ("ref", "head")
+            for side in sides:
+                r = workers[side].send({"op": "run", "query": n, "sf_dir": sf_dir})
+                if "sec" in r:
+                    samples[n][side][i] = r["sec"]
+                else:
+                    issues.append({"query": n, "side": side, "round": i, **r})
+    return samples
+
+
+def _abref_query_stats(h: list[float | None], rf: list[float | None]) -> dict:
+    """Per-query readout of ``_abref_rounds`` samples (None = errored
+    round, skipped in every statistic)."""
+    hv = [x for x in h if x is not None]
+    rv = [x for x in rf if x is not None]
+    out: dict = {
+        "head": {
+            "median": round(statistics.median(hv), 3) if hv else None,
+            "min": min(hv) if hv else None,
+            "samples": h,
+        },
+        "ref": {
+            "median": round(statistics.median(rv), 3) if rv else None,
+            "min": min(rv) if rv else None,
+            "samples": rf,
+        },
+    }
+    if hv and rv:
+        out["speedup_vs_ref"] = round(
+            statistics.median(rv) / max(statistics.median(hv), 1e-9), 3
+        )
+        out["speedup_vs_ref_min"] = round(min(rv) / max(min(hv), 1e-9), 3)
+    # the most co-load-robust readout: each round's head/ref samples ran
+    # SECONDS apart, so their ratio is immune to anything slower-varying
+    # than a pair; the median across rounds then drops pairs a spike
+    # landed inside of (observed: a mid-run spike can inflate one side
+    # of 2-3 pairs; the remaining clean pairs agree to a few %)
+    pairs = [
+        r / max(hh, 1e-9)
+        for hh, r in zip(h, rf)
+        if hh is not None and r is not None
+    ]
+    if pairs:
+        out["speedup_vs_ref_pairs"] = round(statistics.median(pairs), 3)
+    return out
+
+
 def run_ab_ref(
     ref: str, names: list[str], rounds: int, sf_dirs: list[str]
 ) -> None:
@@ -473,9 +537,6 @@ def run_ab_ref(
             calib0 = {
                 s: workers[s].send({"op": "calib"}) for s in ("head", "ref")
             }
-            samples: dict[str, dict[str, list[float]]] = {
-                n: {"head": [], "ref": []} for n in names
-            }
             issues: list[dict] = []
             for n in names:  # one untimed warmup per side
                 for side in ("head", "ref"):
@@ -484,61 +545,14 @@ def run_ab_ref(
                     )
                     if "sec" not in r:
                         issues.append({"query": n, "side": side, **r})
-            for i in range(rounds):
-                for j, n in enumerate(names):
-                    # the TRAILING side of each pair rides caches its twin
-                    # just warmed (the null run measured a ~4% median bias
-                    # toward whichever side consistently trailed), so the
-                    # leading side flips per (round, query) parity rather
-                    # than per round alone
-                    sides = (
-                        ("head", "ref") if (i + j) % 2 == 0 else ("ref", "head")
-                    )
-                    for side in sides:
-                        r = workers[side].send(
-                            {"op": "run", "query": n, "sf_dir": sf_dir}
-                        )
-                        if "sec" in r:
-                            samples[n][side].append(r["sec"])
+            samples = _abref_rounds(workers, names, rounds, sf_dir, issues)
             calib1 = {
                 s: workers[s].send({"op": "calib"}) for s in ("head", "ref")
             }
-            per_q = {}
-            for n in names:
-                h, rf = samples[n]["head"], samples[n]["ref"]
-                per_q[n] = {
-                    "head": {
-                        "median": round(statistics.median(h), 3) if h else None,
-                        "min": min(h) if h else None,
-                        "samples": h,
-                    },
-                    "ref": {
-                        "median": round(statistics.median(rf), 3) if rf else None,
-                        "min": min(rf) if rf else None,
-                        "samples": rf,
-                    },
-                }
-                if h and rf:
-                    per_q[n]["speedup_vs_ref"] = round(
-                        statistics.median(rf) / max(statistics.median(h), 1e-9), 3
-                    )
-                    per_q[n]["speedup_vs_ref_min"] = round(
-                        min(rf) / max(min(h), 1e-9), 3
-                    )
-                    # the most co-load-robust readout: each round's
-                    # head/ref samples ran SECONDS apart, so their ratio
-                    # is immune to anything slower-varying than a pair;
-                    # the median across rounds then drops pairs a spike
-                    # landed inside of (observed: a mid-run spike can
-                    # inflate one side of 2-3 pairs; the remaining clean
-                    # pairs agree to a few %)
-                    per_q[n]["speedup_vs_ref_pairs"] = round(
-                        statistics.median(
-                            r / max(hh, 1e-9)
-                            for hh, r in zip(h, rf)
-                        ),
-                        3,
-                    )
+            per_q = {
+                n: _abref_query_stats(samples[n]["head"], samples[n]["ref"])
+                for n in names
+            }
             record["sections"][sf_dir] = {
                 "queries": per_q,
                 "issues": issues,

@@ -100,7 +100,7 @@ def build_ivf_pq_index(
         _spread(corpus).select(id_col, vec_col), cents, id_col, 1, vec_col, dim
     )
     chunks = _pq_chunks_expr(n_sub, dim // n_sub)
-    cents_b = _pq_codebooks(corpus, n_codes, chunks, id_col, vec_col, n=n)
+    cents_b = _pq_codebooks(corpus, n_codes, n_sub, chunks, id_col, vec_col, n=n)
     corpus_chunks = cells.select(
         F.col(id_col),
         "cid",
@@ -167,14 +167,16 @@ def _read_probed_codes(
     probed cids are already collected, so this lists the codes dir ONCE
     (one listStatus: cell names only, no per-file recursion outside
     probed cells), reads exactly the probed leaf dirs under a basePath
-    (cid is recovered from the path, inference types it INT exactly as
-    whole-tree discovery did), and keeps the ``isin`` partition filter
-    so the scan still carries the PartitionFilters prune. A probed cell
-    with no directory (possible: a centroid can itself be assigned to
-    ANOTHER centroid's cell, so an empty cell writes no dir) contributes
-    zero rows — exactly what partition pruning produced. The data schema is pinned from the build contract: the
-    id column keeps the corpus's id dtype (the fingerprint-pinned build
-    corpus IS this corpus), and s/code are the INTs _pq_encode emits.
+    (cid is recovered from the path), and keeps the ``isin`` partition
+    filter so the scan still carries the PartitionFilters prune. A
+    probed cell with no directory (possible: a centroid can itself be
+    assigned to ANOTHER centroid's cell, so an empty cell writes no dir)
+    contributes zero rows — exactly what partition pruning produced.
+    The schema is pinned from the build contract, and the no-live-cell
+    branch returns the same one: the id column keeps the corpus's id
+    dtype (the fingerprint-pinned build corpus IS this corpus), s/code
+    are the INTs _pq_encode emits, and the cid partition column is the
+    INT whole-tree discovery infers.
     This is also debris-proof: a crashed compaction's ``cid=N.old``
     leftovers can never widen cid to string here, because only exact
     ``cid=N`` names are ever read."""
@@ -189,24 +191,20 @@ def _read_probed_codes(
         for st in fs.listStatus(codes_p)
         if not st.isFile()
     }
-    data_schema = T.StructType(
+    schema = T.StructType(
         [
             T.StructField(id_col, corpus.schema[id_col].dataType),
             T.StructField("s", T.IntegerType()),
             T.StructField("code", T.IntegerType()),
+            T.StructField("cid", T.IntegerType()),
         ]
     )
     paths = [f"{codes_dir}/cid={c}" for c in probe_cids if f"cid={c}" in live]
     if not paths:
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                data_schema.fields + [T.StructField("cid", T.IntegerType())]
-            ),
-        )
+        return spark.createDataFrame([], schema)
     return (
         spark.read.option("basePath", codes_dir)
-        .schema(data_schema)
+        .schema(schema)
         .parquet(*paths)
         .filter(F.col("cid").isin(probe_cids))
     )

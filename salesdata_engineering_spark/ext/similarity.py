@@ -808,7 +808,7 @@ def _local_broadcast(df: DataFrame, limit: int | None = None) -> tuple:
     return F.broadcast(spark.createDataFrame(rows, df.schema)), rows
 
 
-def _local_centroids(centroids: DataFrame, dim: int) -> Column:
+def _local_centroids(centroids: DataFrame, dim: int) -> DataFrame:
     """The broadcast (cid, _cvec, _cn) centroid frame as a collected
     local relation — see :func:`_local_broadcast` for when that pays.
     Used by the PERSISTED-index build, where the same sample otherwise
@@ -827,11 +827,12 @@ def _local_centroids(centroids: DataFrame, dim: int) -> Column:
 def _pq_codebooks(
     corpus: DataFrame,
     n_codes: int,
+    n_sub: int,
     chunks: str,
     id_col: str,
     vec_col: str,
     n: int | None = None,
-) -> Column:
+) -> DataFrame:
     """Broadcast (s, c, _cchunk, _cc) codebook frame: code c of subspace
     s = the s-th chunk of the corpus vector with id ``c * step``
     (deterministic strided sample — the IVF-centroid idea per subspace),
@@ -887,12 +888,8 @@ def _pq_codebooks(
         )
         .select("s", "c", "_cchunk", dot("_cchunk", "_cchunk").alias("_cc"))
     )
-    # chunks always explodes to the same per-vector row count: read it
-    # from the template (sequence(0, n_sub-1)) so the density arithmetic
-    # can never drift from the explode
-    import re as _re
-
-    n_sub = int(_re.search(r"sequence\(0, (\d+)\)", chunks).group(1)) + 1
+    # ``chunks`` (built by _pq_chunks_expr(n_sub, ...)) explodes every
+    # vector into exactly n_sub rows
     cents_b, rows = _local_broadcast(cents)
     n_found = len(rows) // n_sub
     if n_found != n_codes:
@@ -1137,7 +1134,7 @@ def pq_adc_topk(
     d_sub = dim // n_sub
     chunks = _pq_chunks_expr(n_sub, d_sub)
     cents_b = _pq_codebooks(
-        corpus, n_codes, chunks, id_col, vec_col, n=corpus_count
+        corpus, n_codes, n_sub, chunks, id_col, vec_col, n=corpus_count
     )
 
     corpus_chunks = _spread(corpus).select(
@@ -1246,7 +1243,7 @@ def ivf_pq_topk(
     d_sub = dim // n_sub
     chunks = _pq_chunks_expr(n_sub, d_sub)
     cents_b = _pq_codebooks(
-        corpus, n_codes, chunks, id_col, vec_col, n=corpus_count
+        corpus, n_codes, n_sub, chunks, id_col, vec_col, n=corpus_count
     )
     # encode the CELL-ASSIGNED corpus so each code row carries its cid —
     # the carry rides the same (id, s) hash aggregate for free (cid is

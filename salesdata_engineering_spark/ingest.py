@@ -21,37 +21,29 @@ Engine re-expression, Spark-first:
 - File moves go through the local/Hadoop filesystem module and work on
   any FS the JVM can mount.
 
-Scale: validation probes only CSV headers (1-row scans); the data scan
-is one multi-path ``spark.read.csv`` over all accepted files, so
-Catalyst sees a single source — partition count follows file splits,
-not file count.
+Scale: validation reads only each CSV's header line, on the driver (no
+Spark job); the data scan is one multi-path ``spark.read.csv`` per
+distinct header, typed by the contract in ``schemas.RAW_SALES_SCHEMA``
+(extra columns as strings) with ``FAILFAST``, so Catalyst sees one
+source per header shape — partition count follows file splits, not file
+count — and a row that breaks the contract fails the load instead of
+being inferred into a looser type.
 """
 
 from __future__ import annotations
 
+import csv
 import shutil
 from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from .fsops import fs_exists
 from .functions import fold_extra_columns
-
-#: the reference's mandatory-column contract (resources/dev/config.py:40)
-MANDATORY_COLUMNS: tuple[str, ...] = (
-    "customer_id",
-    "store_id",
-    "product_name",
-    "sales_date",
-    "sales_person_id",
-    "price",
-    "quantity",
-    "total_cost",
-)
-
-#: exact catch-all name — WITH the space (main.py:195-197)
-ADDITIONAL_COLUMN = "additional column"
+from .schemas import ADDITIONAL_COLUMN, LEDGER_SCHEMA, MANDATORY_SALES_COLUMNS, RAW_SALES_SCHEMA
 
 STATUS_ACTIVE = "A"
 STATUS_DONE = "I"
@@ -59,29 +51,33 @@ STATUS_DONE = "I"
 
 @dataclass
 class ValidationResult:
-    ok: list[str] = field(default_factory=list)
+    #: accepted path -> its header's column names
+    ok: dict[str, list[str]] = field(default_factory=dict)
     rejected: dict[str, list[str]] = field(default_factory=dict)  # path -> missing cols
 
 
-def probe_columns(spark: SparkSession, path: str) -> list[str]:
-    """S1 — header-only schema probe (parity: main.py:113)."""
-    return spark.read.csv(path, header=True).columns
+def probe_columns(path: str) -> list[str]:
+    """S1 — header-only schema probe (parity: main.py:113): the file's
+    first line, read on the driver from the landing dir."""
+    with open(path, newline="") as fh:
+        return next(csv.reader(fh), [])
 
 
 def validate_files(
     spark: SparkSession,
     paths: list[str],
-    mandatory: tuple[str, ...] = MANDATORY_COLUMNS,
+    mandatory: tuple[str, ...] = MANDATORY_SALES_COLUMNS,
 ) -> ValidationResult:
     """Set-difference each file's header against the contract
     (parity: main.py:110-121). Missing columns ⇒ whole-file reject."""
     res = ValidationResult()
     for p in paths:
-        missing = sorted(set(mandatory) - set(probe_columns(spark, p)))
+        header = probe_columns(p)
+        missing = sorted(set(mandatory) - set(header))
         if missing:
             res.rejected[p] = missing
         else:
-            res.ok.append(p)
+            res.ok[p] = header
     return res
 
 
@@ -98,19 +94,46 @@ def route_rejected(rejected: dict[str, list[str]], error_dir: str) -> list[str]:
     return moved
 
 
+def _contract_schema(header: list[str]) -> T.StructType:
+    """Read schema for a file with ``header``: the contract's type for
+    each column it declares (``schemas.RAW_SALES_SCHEMA``), string for
+    any extra column."""
+    return T.StructType(
+        [
+            RAW_SALES_SCHEMA[c] if c in RAW_SALES_SCHEMA.names else T.StructField(c, T.StringType())
+            for c in header
+        ]
+    )
+
+
 def read_with_fold(
     spark: SparkSession,
-    path: str,
-    mandatory: tuple[str, ...] = MANDATORY_COLUMNS,
+    path: str | list[str],
+    mandatory: tuple[str, ...] = MANDATORY_SALES_COLUMNS,
+    header: list[str] | None = None,
 ) -> DataFrame:
-    """S2 + the extra-column fold (parity: main.py:189-202).
+    """S2 + the extra-column fold (parity: main.py:189-202) over one file,
+    or several files sharing ``header`` (probed from the first when not
+    given).
 
+    Each column is read as the contract types it, with the header
+    checked against the schema and ``FAILFAST``: a value that does not
+    parse as its declared type (a non-numeric id or price) fails the
+    action that parses that column, instead of loosening its type.
     Surplus columns' VALUES are comma-joined per row into the catch-all
     column (schema evolution by stringification — observable reference
     behavior, preserved exactly, space in the name included); missing
     catch-all when no extras ⇒ NULL literal (main.py:200)."""
-    df = spark.read.csv(path, header=True, inferSchema=True)
-    extra = [c for c in df.columns if c not in mandatory]
+    paths = [path] if isinstance(path, str) else path
+    header = header if header is not None else probe_columns(paths[0])
+    df = spark.read.csv(
+        paths,
+        header=True,
+        schema=_contract_schema(header),
+        enforceSchema=False,
+        mode="FAILFAST",
+    )
+    extra = [c for c in header if c not in mandatory]
     if extra:
         df = df.withColumn(ADDITIONAL_COLUMN, fold_extra_columns(extra))
     else:
@@ -170,16 +193,22 @@ def read_rows_validated(
 
 def union_files(
     spark: SparkSession,
-    paths: list[str],
-    mandatory: tuple[str, ...] = MANDATORY_COLUMNS,
+    paths: list[str] | dict[str, list[str]],
+    mandatory: tuple[str, ...] = MANDATORY_SALES_COLUMNS,
 ) -> DataFrame:
-    """U1 — union the canonical per-file frames by NAME (replaces the
-    reference's positional union onto an empty JDBC seed frame,
-    main.py:183-204)."""
-    frames = [read_with_fold(spark, p, mandatory) for p in paths]
+    """U1 — union the canonical frames by NAME (replaces the reference's
+    positional union onto an empty JDBC seed frame, main.py:183-204).
+    Files sharing a header are read together in one multi-path scan.
+    ``paths`` may carry the already-probed headers (path -> columns, as
+    :func:`validate_files` returns them)."""
+    headers = paths if isinstance(paths, dict) else {p: probe_columns(p) for p in paths}
+    groups: dict[tuple[str, ...], list[str]] = {}
+    for p, header in headers.items():
+        groups.setdefault(tuple(header), []).append(p)
+    frames = [read_with_fold(spark, ps, mandatory, list(h)) for h, ps in groups.items()]
     out = frames[0]
     for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
+        out = out.unionByName(f)
     return out
 
 
@@ -201,28 +230,27 @@ class FileLedger:
         # in snapshot()'s latest-per-file resolution.
         self._seq = 0
         if self._exists():
-            row = self.spark.read.parquet(self.path).agg(F.max("seq")).first()
+            row = self._log().agg(F.max("seq")).first()
             self._seq = int(row[0] or 0)
 
     def _exists(self) -> bool:
-        try:
-            self.spark.read.parquet(self.path)
-            return True
-        except Exception:
-            return False
+        return fs_exists(self.spark, self.path)
+
+    def _log(self) -> DataFrame:
+        return self.spark.read.schema(LEDGER_SCHEMA).parquet(self.path)
 
     def snapshot(self) -> DataFrame:
         """Latest status per file (empty frame if no ledger yet)."""
         if not self._exists():
-            return self.spark.createDataFrame([], "file_name string, status string, seq long")
-        log = self.spark.read.parquet(self.path)
+            return self.spark.createDataFrame([], LEDGER_SCHEMA)
         from pyspark.sql import Window
 
         w = Window.partitionBy("file_name").orderBy(F.col("seq").desc())
         return (
-            log.withColumn("_rn", F.row_number().over(w))
+            self._log()
+            .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .select("file_name", "status", "seq")
+            .select(*LEDGER_SCHEMA.names)
         )
 
     def record(self, files: list[str], status: str) -> None:
@@ -235,9 +263,7 @@ class FileLedger:
         same as for any append-log table."""
         self._seq += 1
         rows = [(Path(f).name, status, self._seq) for f in files]
-        self.spark.createDataFrame(rows, "file_name string, status string, seq long").write.mode(
-            "append"
-        ).parquet(self.path)
+        self.spark.createDataFrame(rows, LEDGER_SCHEMA).write.mode("append").parquet(self.path)
 
     def in_flight(self) -> DataFrame:
         return self.snapshot().filter(F.col("status") == STATUS_ACTIVE).select("file_name")
@@ -265,7 +291,7 @@ def ingest_batch(
     landing_dir: str,
     error_dir: str,
     ledger: FileLedger,
-    mandatory: tuple[str, ...] = MANDATORY_COLUMNS,
+    mandatory: tuple[str, ...] = MANDATORY_SALES_COLUMNS,
 ) -> tuple[DataFrame | None, IngestReport]:
     """The reference's main.py pipeline, steps 1-5: discover → skip
     already-done → validate → route rejects → mark A → union. Caller
@@ -277,6 +303,7 @@ def ingest_batch(
     moved = route_rejected(result.rejected, error_dir)
     if not result.ok:
         return None, IngestReport([], moved, 0)
-    ledger.record(result.ok, STATUS_ACTIVE)
+    accepted = list(result.ok)
+    ledger.record(accepted, STATUS_ACTIVE)
     df = union_files(spark, result.ok, mandatory)
-    return df, IngestReport(result.ok, moved, df.count())
+    return df, IngestReport(accepted, moved, df.count())

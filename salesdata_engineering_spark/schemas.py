@@ -18,19 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-#: Mandatory columns every incoming sales file must carry
-#: (parity: resources/dev/config.py:40).
-MANDATORY_SALES_COLUMNS: list[str] = [
-    "customer_id",
-    "store_id",
-    "product_name",
-    "sales_date",
-    "sales_person_id",
-    "price",
-    "quantity",
-    "total_cost",
-]
-
 #: Name of the catch-all column extra CSV columns are folded into.
 #: The reference uses a literal space in the name (`main.py:195`): we keep
 #: that exact observable name in the compat path.
@@ -38,9 +25,11 @@ ADDITIONAL_COLUMN = "additional column"
 
 MONEY = T.DecimalType(18, 2)
 
-#: Canonical 9-column fact schema after ingestion
-#: (8 mandatory + the additional-column fold).
-SALES_SCHEMA = T.StructType(
+#: CSV read schema for a *valid* raw file (before the fold): the
+#: mandatory columns every incoming sales file must carry (parity:
+#: resources/dev/config.py:40), typed; extra columns are discovered from
+#: the header probe and read as strings.
+RAW_SALES_SCHEMA = T.StructType(
     [
         T.StructField("customer_id", T.IntegerType()),
         T.StructField("store_id", T.IntegerType()),
@@ -50,35 +39,28 @@ SALES_SCHEMA = T.StructType(
         T.StructField("price", MONEY),
         T.StructField("quantity", T.IntegerType()),
         T.StructField("total_cost", MONEY),
-        T.StructField(ADDITIONAL_COLUMN, T.StringType()),
     ]
 )
 
-#: CSV read schema for a *valid* raw file (before the fold): mandatory
-#: columns only; extra columns are discovered from the header probe.
-RAW_SALES_SCHEMA = T.StructType(
-    [
-        T.StructField("customer_id", T.IntegerType()),
-        T.StructField("store_id", T.IntegerType()),
-        T.StructField("product_name", T.StringType()),
-        T.StructField("sales_date", T.StringType()),
-        T.StructField("sales_person_id", T.IntegerType()),
-        T.StructField("price", MONEY),
-        T.StructField("quantity", T.IntegerType()),
-        T.StructField("total_cost", MONEY),
-    ]
+#: The mandatory-column contract, in file order.
+MANDATORY_SALES_COLUMNS: tuple[str, ...] = tuple(RAW_SALES_SCHEMA.names)
+
+#: Canonical 9-column fact schema after ingestion
+#: (8 mandatory + the additional-column fold).
+SALES_SCHEMA = T.StructType(
+    RAW_SALES_SCHEMA.fields + [T.StructField(ADDITIONAL_COLUMN, T.StringType())]
 )
 
 #: File-processing ledger (parity: product_staging_table,
-#: resources/sql_scripts/table_scripts.sql:1-8). Status 'A' = in-flight,
-#: 'I' = done.
+#: resources/sql_scripts/table_scripts.sql:1-8) as ``ingest.FileLedger``
+#: writes it: an append-only log of (file, status, seq) rows, where
+#: status 'A' = in-flight, 'I' = done and the highest seq per file is its
+#: current status. Used for its writes, its reads and its empty snapshot.
 LEDGER_SCHEMA = T.StructType(
     [
         T.StructField("file_name", T.StringType(), False),
-        T.StructField("file_location", T.StringType()),
-        T.StructField("created_date", T.TimestampType()),
-        T.StructField("updated_date", T.TimestampType()),
         T.StructField("status", T.StringType(), False),
+        T.StructField("seq", T.LongType(), False),
     ]
 )
 

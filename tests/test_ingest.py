@@ -99,6 +99,72 @@ def test_ingest_batch_end_to_end_with_ledger_and_rerun(spark, tmp_path, landing)
     assert len(report3.accepted) == 1 and report3.rows == 2
 
 
+def test_ingest_reads_the_declared_contract_types(spark, landing, tmp_path):
+    """Columns come out as schemas.RAW_SALES_SCHEMA types (money exact
+    DECIMAL(18,2), never an inferred double); extras fold as strings."""
+    from salesdata_engineering_spark.schemas import MONEY, RAW_SALES_SCHEMA
+
+    ledger = FileLedger(spark, str(tmp_path / "ledger"))
+    df, _ = ingest_batch(spark, str(landing), str(tmp_path / "err"), ledger)
+    types = dict(df.dtypes)
+    assert types["price"] == types["total_cost"] == MONEY.simpleString() == "decimal(18,2)"
+    assert [(f.name, f.dataType) for f in df.schema.fields[:8]] == [
+        (f.name, f.dataType) for f in RAW_SALES_SCHEMA.fields
+    ]
+    assert types[ADDITIONAL_COLUMN] == "string"
+
+
+def test_malformed_row_fails_the_load(spark, tmp_path):
+    """A value that does not parse as its declared type raises when the
+    frame is read (FAILFAST), instead of loosening the column's type."""
+    p = tmp_path / "sales_data_2024-01-05.csv"
+    p.write_text(VALID_CSV + "7,121,rice,2024-01-05,3,fifty,2,100\n")
+    df = read_with_fold(spark, str(p))
+    with pytest.raises(Exception, match="MALFORMED|FAILFAST|malformed"):
+        df.collect()
+
+
+def test_union_reads_each_header_shape_once(spark, landing, tmp_path):
+    """Files sharing a header are one multi-path scan: three files of
+    two header shapes plan exactly two CSV scans."""
+    import shutil
+
+    valid = landing / "sales_data_2024-01-01.csv"
+    twin = tmp_path / "sales_data_2024-01-04.csv"
+    shutil.copy(valid, twin)
+    df = union_files(spark, [str(valid), str(twin), str(landing / "sales_data_2024-01-02.csv")])
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan csv") == 2, plan
+    assert df.count() == 6
+
+
+def test_ledger_schema_is_what_the_ledger_writes(spark, tmp_path):
+    """The declared LEDGER_SCHEMA is the on-disk log's schema, the empty
+    snapshot's schema, and the one it is read with — opening an existing
+    ledger runs only the seq high-water-mark aggregate, no schema
+    inference."""
+    from salesdata_engineering_spark.schemas import LEDGER_SCHEMA
+
+    path = str(tmp_path / "ledger_schema")
+    ledger = FileLedger(spark, path)
+    assert ledger.snapshot().schema == LEDGER_SCHEMA
+    ledger.record(["a.csv"], "A")
+    on_disk = spark.read.parquet(path).schema
+    assert [(f.name, f.dataType) for f in on_disk] == [
+        (f.name, f.dataType) for f in LEDGER_SCHEMA
+    ]
+
+    sc = spark.sparkContext
+    sc.setJobGroup("ledger-open-test", "job-count pin")
+    try:
+        reopened = FileLedger(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the max(seq) aggregate: its shuffle-map stage and its result stage
+    assert len(sc.statusTracker().getJobIdsForGroup("ledger-open-test")) == 2
+    assert reopened._seq == 1
+
+
 def test_compact_parquet_merges_small_files(spark, tmp_path):
     from salesdata_engineering_spark.io import compact_parquet
 
