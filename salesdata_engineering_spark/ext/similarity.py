@@ -100,10 +100,6 @@ def cosine(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
     return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
 
 
-def _as_double(df: DataFrame, vec_col: str) -> DataFrame:
-    return df.withColumn(vec_col, F.col(vec_col).cast("array<double>"))
-
-
 # Shared with the relational operators (ops/partitioning.py): the
 # pair-scan stream side of the ANN kernels needs the same guard — a
 # broadcast nested-loop over a 1-partition stream runs in ONE task.

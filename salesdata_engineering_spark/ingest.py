@@ -13,8 +13,8 @@ everything onto an empty seed frame (main.py:183-204).
 Engine re-expression, Spark-first:
 
 - No download step: Spark reads object-store paths directly.
-- The ledger is a parquet table; "which files are new" is a left-anti
-  join, "already in flight" a left-semi join — not cursor SQL.
+- The ledger is a parquet log the driver reads and appends with Arrow,
+  as the reference's driver runs cursor SQL: no Spark job per call.
 - Union is ``unionByName(allowMissingColumns=True)`` over per-file
   frames; the "additional column" fold is kept as an explicit compat
   op (exact name with the space, main.py:195-197).
@@ -34,19 +34,25 @@ from __future__ import annotations
 
 import csv
 import shutil
+import uuid
 from dataclasses import dataclass, field
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from .fsops import fs_exists
 from .functions import fold_extra_columns
 from .schemas import ADDITIONAL_COLUMN, LEDGER_SCHEMA, MANDATORY_SALES_COLUMNS, RAW_SALES_SCHEMA
 
 STATUS_ACTIVE = "A"
 STATUS_DONE = "I"
+
+_LEDGER_ARROW_SCHEMA = to_arrow_schema(LEDGER_SCHEMA)
 
 
 @dataclass
@@ -212,71 +218,73 @@ def union_files(
     return out
 
 
+def _ledger_table(rows: list[tuple[str, str, int]]) -> pa.Table:
+    return pa.Table.from_pylist(
+        [dict(zip(LEDGER_SCHEMA.names, r)) for r in rows], schema=_LEDGER_ARROW_SCHEMA
+    )
+
+
 class FileLedger:
     """Parquet-backed processing ledger (parity: product_staging_table,
     resources/sql_scripts/table_scripts.sql:1-8 + main.py:39-49,157-174,
     318-334). Status A = in-flight, I = done.
 
-    Append-only log; current status = latest row per file (ts, seq
-    ordering). At scale this is a tiny dimension — broadcast in every
-    join against file lists."""
+    Append-only log; current status = the highest-seq row per file. The
+    log is a few rows per landed file, so it is read and appended on the
+    driver with Arrow (``path``: an absolute path or any URI
+    ``pyarrow.fs`` resolves) and no call starts a Spark job. One small
+    file lands per ``record``; ``io.compact_parquet(ledger.path)`` is the
+    remedy for a long log."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        self._fs, self._dir = pafs.FileSystem.from_uri(path)
         # Resume from the persisted high-water mark: a fresh process
         # appending to an existing ledger must not restart seq at 1, or
-        # its new status rows would be shadowed by older higher-seq rows
-        # in snapshot()'s latest-per-file resolution.
-        self._seq = 0
-        if self._exists():
-            row = self._log().agg(F.max("seq")).first()
-            self._seq = int(row[0] or 0)
+        # its new status rows would be shadowed by older higher-seq rows.
+        self._seq = max((seq for _, seq in self._read().values()), default=0)
 
-    def _exists(self) -> bool:
-        return fs_exists(self.spark, self.path)
-
-    def _log(self) -> DataFrame:
-        return self.spark.read.schema(LEDGER_SCHEMA).parquet(self.path)
+    def _read(self) -> dict[str, tuple[str, int]]:
+        """file name -> (status, seq) of its highest-seq row, over the
+        log's ``*.parquet`` files, skipping hidden (``_``/``.``) names as
+        Spark and Arrow do. A file not of LEDGER_SCHEMA's columns raises."""
+        want = [(f.name, f.type) for f in _LEDGER_ARROW_SCHEMA]
+        rows: list[tuple[str, str, int]] = []
+        for info in self._fs.get_file_info(pafs.FileSelector(self._dir, allow_not_found=True)):
+            if not info.base_name.endswith(".parquet") or info.base_name[0] in "_.":
+                continue
+            table = pq.read_table(info.path, filesystem=self._fs)
+            if (got := [(f.name, f.type) for f in table.schema]) != want:
+                raise ValueError(f"ledger file {info.path} has columns {got}, expected {want}")
+            rows += zip(*table.to_pydict().values())
+        return {name: (status, seq) for name, status, seq in sorted(rows, key=lambda r: r[2])}
 
     def snapshot(self) -> DataFrame:
         """Latest status per file (empty frame if no ledger yet)."""
-        if not self._exists():
-            return self.spark.createDataFrame([], LEDGER_SCHEMA)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("file_name").orderBy(F.col("seq").desc())
-        return (
-            self._log()
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(*LEDGER_SCHEMA.names)
-        )
+        rows = [(name, status, seq) for name, (status, seq) in self._read().items()]
+        return self.spark.createDataFrame(_ledger_table(rows), LEDGER_SCHEMA)
 
     def record(self, files: list[str], status: str) -> None:
-        """INSERT/UPDATE equivalent: append (file, status, seq) rows.
-
-        Already batched per status transition (one tiny parquet appended
-        per CALL, not per file) — pass the whole cycle's file list at
-        once. A long-lived ingest loop still accretes one small file per
-        transition; compact_parquet(ledger.path) is the standing remedy,
-        same as for any append-log table."""
-        self._seq += 1
-        rows = [(Path(f).name, status, self._seq) for f in files]
-        self.spark.createDataFrame(rows, LEDGER_SCHEMA).write.mode("append").parquet(self.path)
+        """INSERT/UPDATE equivalent: append (file, status, seq) rows, one
+        parquet file per CALL — pass the whole cycle's file list at once.
+        The file is written under a hidden temp name and renamed into
+        place, so a crash mid-append leaves the log as it was."""
+        seq = self._seq + 1
+        rows = [(Path(f).name, status, seq) for f in files]
+        name = f"part-{seq:05d}-{uuid.uuid4().hex}.parquet"
+        self._fs.create_dir(self._dir, recursive=True)
+        pq.write_table(_ledger_table(rows), f"{self._dir}/.{name}.tmp", filesystem=self._fs)
+        self._fs.move(f"{self._dir}/.{name}.tmp", f"{self._dir}/{name}")
+        self._seq = seq
 
     def in_flight(self) -> DataFrame:
         return self.snapshot().filter(F.col("status") == STATUS_ACTIVE).select("file_name")
 
     def pending(self, files: list[str]) -> list[str]:
-        """Files never completed: anti-join against status I
-        (the relational form of main.py:39-49's cursor check)."""
-        names = self.spark.createDataFrame(
-            [(Path(f).name, f) for f in files], "file_name string, path string"
-        )
-        done = self.snapshot().filter(F.col("status") == STATUS_DONE).select("file_name")
-        keep = names.join(F.broadcast(done), "file_name", "left_anti")
-        return [r.path for r in keep.collect()]
+        """Files never completed (the cursor check of main.py:39-49)."""
+        state = self._read()
+        return [f for f in files if state.get(Path(f).name, ("",))[0] != STATUS_DONE]
 
 
 @dataclass

@@ -1,7 +1,8 @@
 """Sinks (SURVEY §2.1 S4-S6) and layout helpers.
 
 Parity targets in /root/reference:
-- S4 plain overwrite parquet: src/main/write/parquet_writer.py:8-19
+- S4 plain overwrite parquet: src/main/write/parquet_writer.py:8-19 —
+  ``df.write.mode("overwrite").parquet(path)``, no wrapper needed
 - S5 partitioned parquet (sales_month, store_id): main.py:260-261 —
   the layout that makes month/store predicates prune at read time
 - S6 JDBC append: src/main/write/database_write.py:8-17 — kept as an
@@ -19,11 +20,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S4 — plain parquet sink."""
-    df.write.mode(mode).parquet(path)
 
 
 def write_parquet_partitioned(

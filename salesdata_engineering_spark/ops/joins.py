@@ -2,10 +2,10 @@
 
 The reference hard-codes three inner equi-joins of a fact against tiny
 dimensions (`dimension_tables_join.py:17-54`). At 100 TB the fact side is
-huge and the dims stay small, so the engine's default star join broadcasts
-every dimension — zero shuffle of the fact. Joins between two large
-tables fall through to Catalyst (sort-merge / shuffle-hash, AQE-skew-split)
-by *not* hinting.
+huge and the dims stay small, so the star enrichment
+(``datasets.canonical_sales``) broadcasts every dimension — zero shuffle
+of the fact. Joins between two large tables fall through to Catalyst
+(sort-merge / shuffle-hash, AQE-skew-split) by *not* hinting.
 """
 
 from __future__ import annotations
@@ -13,33 +13,6 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-
-def equi_join(
-    df: DataFrame,
-    other: DataFrame,
-    on: str | Sequence[str] | Column,
-    how: str = "inner",
-    broadcast_right: bool = False,
-) -> DataFrame:
-    """J1-J3 generalized — equi-join with optional broadcast hint."""
-    right = F.broadcast(other) if broadcast_right else other
-    return df.join(right, on, how)
-
-
-def star_join(
-    fact: DataFrame,
-    dims: Sequence[tuple[DataFrame, Column | str | Sequence[str]]],
-    how: str = "inner",
-) -> DataFrame:
-    """Fact ⋈ broadcast(dim1) ⋈ broadcast(dim2) ⋈ ... — the reference's
-    enrichment pipeline (J1→J2→J3) as one declarative chain. Each dim is
-    broadcast: one scan of the fact, no shuffle, join order irrelevant."""
-    out = fact
-    for dim, on in dims:
-        out = out.join(F.broadcast(dim), on, how)
-    return out
 
 
 def semi_join(df: DataFrame, other: DataFrame, on: str | Sequence[str] | Column) -> DataFrame:

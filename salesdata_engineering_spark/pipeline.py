@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -50,33 +50,31 @@ def run_full_pipeline(
             F.col("c_custkey").cast("int").alias("customer_id"),
             F.col("c_name").alias("full_name"),
         )
-        cmart = customer_monthly_spend(sales, cust_dim)
+        cmart = customer_monthly_spend(sales, cust_dim).withColumn(
+            "sales_month_p", F.col("sales_month")
+        )
         smart = sales_team_mart(sales).withColumn(
             "sales_month_p", F.col("sales_month")
         )
 
-        def _cust_chain() -> int:
-            spark.sparkContext.setJobDescription("pipeline: customers mart")
+        def _write_mart(mart: DataFrame, name: str, partition_by: list[str]) -> int:
+            """Write one mart; its row count is observed on the write
+            itself (no read-back, no extra job)."""
+            spark.sparkContext.setJobDescription(f"pipeline: {name}")
+            obs = Observation(name)
             write_parquet_partitioned(
-                cmart.withColumn("sales_month_p", F.col("sales_month")),
-                f"{out_dir}/customers_data_mart",
-                ["sales_month_p"],
+                mart.observe(obs, F.count(F.lit(1)).alias("rows")),
+                f"{out_dir}/{name}",
+                partition_by,
             )
-            return spark.read.parquet(f"{out_dir}/customers_data_mart").count()
+            return obs.get["rows"]
 
-        def _sales_chain() -> int:
-            spark.sparkContext.setJobDescription("pipeline: sales team mart")
-            write_parquet_partitioned(
-                smart,
-                f"{out_dir}/sales_team_data_mart",
-                ["sales_month_p", "store_id"],
-            )
-            return spark.read.parquet(f"{out_dir}/sales_team_data_mart").count()
-
+        cust_args = (cmart, "customers_data_mart", ["sales_month_p"])
+        sales_args = (smart, "sales_team_data_mart", ["sales_month_p", "store_id"])
         if persist:
             # Materialize the shared fact ONCE, then run the two
-            # independent mart chains (write + count-back) CONCURRENTLY:
-            # the scheduler back-fills each partitioned write's straggler
+            # independent mart writes CONCURRENTLY: the scheduler
+            # back-fills each partitioned write's straggler
             # tail with the other chain's tasks instead of leaving the
             # cluster idle between sequential actions. The up-front count
             # exists because two concurrently-launched cold jobs would
@@ -89,11 +87,11 @@ def run_full_pipeline(
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=2) as pool:
-                c_fut = pool.submit(_cust_chain)
-                s_fut = pool.submit(_sales_chain)
+                c_fut = pool.submit(_write_mart, *cust_args)
+                s_fut = pool.submit(_write_mart, *sales_args)
                 c_rows, s_rows = c_fut.result(), s_fut.result()
         else:
-            c_rows, s_rows = _cust_chain(), _sales_chain()
+            c_rows, s_rows = _write_mart(*cust_args), _write_mart(*sales_args)
         return PipelineResult(c_rows, s_rows, out_dir)
     finally:
         spark.sparkContext.setJobDescription(None)

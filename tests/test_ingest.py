@@ -7,6 +7,8 @@ from __future__ import annotations
 
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -140,9 +142,9 @@ def test_union_reads_each_header_shape_once(spark, landing, tmp_path):
 
 def test_ledger_schema_is_what_the_ledger_writes(spark, tmp_path):
     """The declared LEDGER_SCHEMA is the on-disk log's schema, the empty
-    snapshot's schema, and the one it is read with — opening an existing
-    ledger runs only the seq high-water-mark aggregate, no schema
-    inference."""
+    snapshot's schema, and the one it is read with — and the ledger runs
+    on the driver: opening, pending, record and snapshot's frame build
+    start no Spark job."""
     from salesdata_engineering_spark.schemas import LEDGER_SCHEMA
 
     path = str(tmp_path / "ledger_schema")
@@ -158,11 +160,65 @@ def test_ledger_schema_is_what_the_ledger_writes(spark, tmp_path):
     sc.setJobGroup("ledger-open-test", "job-count pin")
     try:
         reopened = FileLedger(spark, path)
+        assert reopened.pending(["/landing/a.csv", "/landing/b.csv"]) == [
+            "/landing/a.csv", "/landing/b.csv"
+        ]
+        reopened.record(["a.csv"], STATUS_DONE)
+        assert reopened.pending(["/landing/a.csv", "/landing/b.csv"]) == ["/landing/b.csv"]
+        snap = reopened.snapshot()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    # the max(seq) aggregate: its shuffle-map stage and its result stage
-    assert len(sc.statusTracker().getJobIdsForGroup("ledger-open-test")) == 2
-    assert reopened._seq == 1
+    assert len(sc.statusTracker().getJobIdsForGroup("ledger-open-test")) == 0
+    assert reopened._seq == 2
+    assert snap.schema == LEDGER_SCHEMA
+    assert [tuple(r) for r in snap.collect()] == [("a.csv", STATUS_DONE, 2)]
+
+
+def test_ledger_append_survives_a_crash_before_the_rename(spark, tmp_path, monkeypatch):
+    """A crash between writing an append and renaming it into place
+    leaves the ledger unchanged: the leftover temp file is skipped by
+    the ledger itself, by Spark and by DuckDB's ``*.parquet`` glob."""
+    import duckdb
+    import pyarrow.fs as pafs
+
+    class CrashOnRename(pafs.LocalFileSystem):
+        def move(self, src, dest):
+            raise OSError("injected crash before the rename")
+
+    path = str(tmp_path / "ledger_crash")
+    ledger = FileLedger(spark, path)
+    ledger.record(["a.csv", "b.csv"], "A")
+    monkeypatch.setattr(ledger, "_fs", CrashOnRename())
+    with pytest.raises(OSError, match="injected crash"):
+        ledger.record(["a.csv"], STATUS_DONE)
+    monkeypatch.undo()
+
+    # the append's bytes are on disk, under a name no reader picks up
+    assert [p for p in (tmp_path / "ledger_crash").iterdir() if p.suffix != ".parquet"]
+    want = [("a.csv", "A", 1), ("b.csv", "A", 1)]
+    reopened = FileLedger(spark, path)
+    assert sorted((n, st, seq) for n, (st, seq) in reopened._read().items()) == want
+    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == want
+    duck = duckdb.sql(f"SELECT file_name, status, seq FROM read_parquet('{path}/*.parquet')")
+    assert sorted(duck.fetchall()) == want
+    assert reopened._seq == ledger._seq == 1
+    assert reopened.pending(["a.csv"]) == ["a.csv"]
+
+
+@pytest.mark.parametrize(
+    "columns",
+    [
+        {"file_name": ["b.csv"], "status": ["I"]},  # seq missing
+        {"file_name": ["b.csv"], "status": ["I"], "seq": pa.array([2], pa.int32())},  # int, not bigint
+        {"file": ["b.csv"], "status": ["I"], "seq": [2]},  # file_name renamed
+    ],
+)
+def test_ledger_rejects_a_log_file_not_of_the_ledger_schema(spark, tmp_path, columns):
+    path = tmp_path / "ledger_bad"
+    FileLedger(spark, str(path)).record(["a.csv"], "A")
+    pq.write_table(pa.table(columns), str(path / "part-foreign.parquet"))
+    with pytest.raises(ValueError, match="part-foreign.parquet has columns"):
+        FileLedger(spark, str(path))
 
 
 def test_compact_parquet_merges_small_files(spark, tmp_path):

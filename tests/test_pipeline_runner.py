@@ -19,6 +19,16 @@ def test_full_pipeline_writes_both_marts(spark, sf_dir, tmp_path):
     assert cm.count() == cm.select("customer_id", "sales_month").distinct().count()
 
 
+def test_pipeline_row_counts_equal_the_written_marts(spark, sf_dir, tmp_path):
+    """The counts observed on the writes are the rows a reader finds, on
+    the concurrent (persisted) and on the sequential path."""
+    for persist in (True, False):
+        out = tmp_path / f"counted_{persist}"
+        res = run_full_pipeline(spark, sf_dir, str(out), persist=persist)
+        assert res.customer_mart_rows == spark.read.parquet(str(out / "customers_data_mart")).count()
+        assert res.sales_mart_rows == spark.read.parquet(str(out / "sales_team_data_mart")).count()
+
+
 def test_pipeline_unpersists_cached_frame(spark, sf_dir, tmp_path):
     before = len(spark.sparkContext._jsc.getPersistentRDDs())
     run_full_pipeline(spark, sf_dir, str(tmp_path / "m2"))
